@@ -12,7 +12,9 @@ rounded to fixed decimals on both sides so value-hashes compare.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -193,6 +195,7 @@ def q_bm25_wand(spark, sf_dir):
             F.col("doc_id").cast("string").alias("url"), "text"
         )
         out = tempfile.mkdtemp(prefix="ela_wand_idx_")
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
         build_index(spark, pages, out, n_buckets=4, n_shards=2)
         _WAND_CACHE[key] = load_index(spark, out)
     idx = _WAND_CACHE[key]

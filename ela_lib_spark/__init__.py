@@ -8,8 +8,8 @@ internalizes the search engine the reference delegates to Lucene:
   (reference scan surface: pkg/es/es5.go:106-163 sliced scroll)
 - term-partitioned merge with deterministic doc-range salting for
   head-term skew
-- delta+varint / PForDelta block compression with per-block max-score
-  metadata
+- delta+varint block compression with per-block max-score metadata
+  (PForDelta stays a library codec in index/codecs.py)
 - block-max WAND top-k BM25 (k1=1.2, b=0.75), rank-identical to a
   brute-force reference scorer
 - migration-surface parity: sync / compare / sync_diff / export / import

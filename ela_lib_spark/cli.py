@@ -31,7 +31,6 @@ def main(argv=None, spark=None):
     b.add_argument("out")
     b.add_argument("--n-buckets", type=int, default=32)
     b.add_argument("--n-shards", type=int, default=8)
-    b.add_argument("--codec", default="varint", choices=["varint", "pfor"])
     b.add_argument("--use-html", action="store_true")
     b.add_argument("--resume", action="store_true")
 
@@ -180,8 +179,7 @@ def main(argv=None, spark=None):
         pages = spark.read.parquet(args.pages)
         m = build_index(
             spark, pages, args.out, n_buckets=args.n_buckets,
-            n_shards=args.n_shards, codec=args.codec,
-            use_html=args.use_html, resume=args.resume,
+            n_shards=args.n_shards, use_html=args.use_html, resume=args.resume,
         )
         print(json.dumps(m))
     elif args.cmd == "delta":

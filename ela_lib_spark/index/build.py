@@ -68,7 +68,6 @@ from ela_lib_spark import BM25_B, BM25_K1
 from ela_lib_spark.functions.text import extract_text, tokenize_col
 from ela_lib_spark.index.codecs import (
     CODEC_VARINT,
-    encode_block,
     varint_decode,
     varint_encode_segmented,
 )
@@ -458,7 +457,7 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
                             deleted: np.ndarray | None = None) -> pd.DataFrame:
     """Whole-batch merge with ~20 numpy calls total, independent of the
     number of (term, shard) groups — the zipf tail makes most groups
-    tiny, so per-group work must be O(0). varint codec only.
+    tiny, so per-group work must be O(0).
 
     `deleted` (sorted int64 doc ids) purges tombstoned postings during
     the merge: postings are dropped after id reconstruction and chunk
@@ -583,70 +582,13 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
     )
 
 
-def _merge_group(out: dict, term_id: int, shard: int, df_val: int,
-                 g: pd.DataFrame, avg_dl: float, codec: str,
-                 block_size: int, deleted: np.ndarray | None = None) -> None:
-    """Merge one (term, shard) group's chunks into encoded blocks
-    (non-varint codecs; the varint path is batch-vectorized above)."""
-    k1, b = BM25_K1, BM25_B
-    ids_l, tfs_l, dls_l = [], [], []
-    for r in g.itertuples(index=False):
-        deltas = varint_decode(r.doc_ids, r.n_docs).astype(np.int64)
-        ids = np.cumsum(deltas) + (r.first_doc_id - int(deltas[0]))
-        ids_l.append(ids)
-        tfs_l.append(varint_decode(r.tfs, r.n_docs).astype(np.int64))
-        dls_l.append(varint_decode(r.dls, r.n_docs).astype(np.int64))
-    ids = np.concatenate(ids_l) if len(ids_l) > 1 else ids_l[0]
-    tfs = np.concatenate(tfs_l) if len(tfs_l) > 1 else tfs_l[0]
-    dls = np.concatenate(dls_l) if len(dls_l) > 1 else dls_l[0]
-    # same in-group ordering requirement as the vectorized path: chunk
-    # doc RANGES can interleave (hash-scattered buckets per read
-    # split), so concatenation order is not doc-id order
-    if len(ids) > 1 and (ids[1:] <= ids[:-1]).any():
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-    if deleted is not None and len(deleted) and len(ids):
-        pos = np.searchsorted(deleted, ids)
-        keep = ~((pos < len(deleted))
-                 & (deleted[np.minimum(pos, len(deleted) - 1)] == ids))
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if len(ids) == 0:
-            return
-    impact = tfs / (tfs + k1 * (1 - b + b * dls / avg_dl))
-    for blk, s in enumerate(range(0, len(ids), block_size)):
-        e = min(s + block_size, len(ids))
-        d_enc, t_enc, l_enc, first, last = encode_block(
-            ids[s:e], tfs[s:e], dls[s:e], codec
-        )
-        out["term_id"].append(term_id)
-        out["shard"].append(shard)
-        out["block_id"].append(blk)
-        out["first_doc_id"].append(first)
-        out["last_doc_id"].append(last)
-        out["doc_ids_delta"].append(d_enc)
-        out["tfs"].append(t_enc)
-        out["dls"].append(l_enc)
-        out["n_docs"].append(e - s)
-        out["block_max_impact"].append(float(impact[s:e].max()))
-        out["df"].append(df_val)
-
-
-def _merge_stream_fn(avg_dl: float, codec: str, block_size: int = BLOCK_SIZE,
+def _merge_stream_fn(avg_dl: float, block_size: int = BLOCK_SIZE,
                      deleted: np.ndarray | None = None):
     """mapInPandas merge: the input partition is sorted by
     (term_id, shard, first_doc_id); groups are detected by key change
     and the trailing (possibly batch-spanning) group is buffered. This
     avoids applyInPandas's per-group JVM round trip — critical because
     the zipf long tail makes most groups tiny."""
-
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        if codec == CODEC_VARINT:
-            return _merge_batch_vectorized(pdf, avg_dl, block_size, deleted)
-        out = {k: [] for k in POSTINGS.fieldNames()}
-        for (term_id, shard), g in pdf.groupby(["term_id", "shard"], sort=False):
-            _merge_group(out, int(term_id), int(shard), int(g["df"].iloc[0]),
-                         g, avg_dl, codec, block_size, deleted)
-        return pd.DataFrame(out)
 
     def fn(it):
         buf = None
@@ -661,9 +603,9 @@ def _merge_stream_fn(avg_dl: float, codec: str, block_size: int = BLOCK_SIZE,
             buf = pdf[mask_last]
             body = pdf[~mask_last]
             if len(body):
-                yield process(body)
+                yield _merge_batch_vectorized(body, avg_dl, block_size, deleted)
         if buf is not None and len(buf):
-            yield process(buf)
+            yield _merge_batch_vectorized(buf, avg_dl, block_size, deleted)
 
     return fn
 
@@ -673,7 +615,6 @@ def merge_chunks(
     avg_dl: float,
     n_shards: int,
     n_buckets: int,
-    codec: str = CODEC_VARINT,
     merge_partitions: int | None = None,
     deleted: np.ndarray | None = None,
 ) -> DataFrame:
@@ -713,7 +654,7 @@ def merge_chunks(
         merge_partitions = max(spark.sparkContext.defaultParallelism, 16)
     part = joined.repartition(merge_partitions, "term_id", "shard")
     part = part.sortWithinPartitions("term_id", "shard", "first_doc_id")
-    return part.mapInPandas(_merge_stream_fn(avg_dl, codec, deleted=deleted),
+    return part.mapInPandas(_merge_stream_fn(avg_dl, deleted=deleted),
                             schema=POSTINGS)
 
 
@@ -807,10 +748,30 @@ def new_snapshot_id(prefix: str) -> str:
     return f"{prefix}-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
 
 
-def write_manifest(out_dir: str, manifest: dict) -> None:
-    """Atomic manifest flip (os.replace) — THE single commit point for
-    index publishes: data dirs are written to versioned names first,
-    then the manifest pointer switches readers over.
+def atomic_write_json(path: str, obj) -> None:
+    """Durable JSON commit, the one protocol every manifest, snapshot
+    and journal write goes through: write a temp file, fsync it,
+    os.replace it over `path`, fsync the directory. A crash or power
+    loss at any step leaves readers the old file or the new one, never
+    a truncated or empty one (a rename without the file fsync can
+    reach disk before the data it names)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
+def write_manifest(out_dir: str, manifest: dict) -> dict:
+    """Atomic manifest flip (atomic_write_json) — THE single commit
+    point for index publishes: data dirs are written to versioned names
+    first, then the manifest pointer switches readers over.
 
     Snapshot log (Iceberg metadata-log analog): every committed
     manifest is also archived under snapshots/<snapshot_id>.json —
@@ -827,9 +788,6 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
         if s not in hist:
             hist.append(s)
     manifest = dict(manifest, history=hist)
-    tmp = _manifest_path(out_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
     if snap:
         sdir = os.path.join(out_dir, "snapshots")
         os.makedirs(sdir, exist_ok=True)
@@ -839,11 +797,7 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
                 f"snapshot id {snap!r} already archived in {sdir!r} — "
                 "snapshot ids must be unique (use new_snapshot_id)"
             )
-        # tmp+replace: a crash mid-write must not leave a truncated
-        # snapshot JSON for retention's json.load to trip over forever
-        with open(spath + ".tmp", "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(spath + ".tmp", spath)
+        atomic_write_json(spath, manifest)
         ledger_dir = os.path.join(out_dir, manifest.get("ledger_dir") or "ledger")
         if os.path.exists(ledger_dir):
             import shutil
@@ -852,7 +806,7 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
                 ledger_dir, os.path.join(sdir, f"{snap}-ledger"),
                 dirs_exist_ok=True,
             )
-    os.replace(tmp, _manifest_path(out_dir))
+    atomic_write_json(_manifest_path(out_dir), manifest)
     return manifest
 
 
@@ -861,10 +815,7 @@ def rewrite_manifest_in_place(out_dir: str, manifest: dict) -> None:
     snapshot — for metadata-only mutations that don't publish new data
     (retention policy set, history pruning by expire_snapshots).
     write_manifest would refuse (its snapshot id is already archived)."""
-    tmp = _manifest_path(out_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, _manifest_path(out_dir))
+    atomic_write_json(_manifest_path(out_dir), manifest)
 
 
 def docs_dir_path(out_dir: str, manifest: dict | None = None) -> str:
@@ -973,7 +924,6 @@ def build_index(
     *,
     n_buckets: int = 32,
     n_shards: int = 8,
-    codec: str = CODEC_VARINT,
     use_html: bool = False,
     resume: bool = False,
     docs_partitions: int | None = None,
@@ -1107,7 +1057,7 @@ def build_index(
     # without an extra repartition shuffle.
     _t = time.monotonic()
     sc.setJobDescription("build:merge")
-    merged = merge_chunks(chunks, float(avg_dl), n_shards, n_buckets, codec,
+    merged = merge_chunks(chunks, float(avg_dl), n_shards, n_buckets,
                           merge_partitions)
     merged.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
     stage_secs["merge"] = round(time.monotonic() - _t, 2)
@@ -1115,7 +1065,7 @@ def build_index(
 
     manifest = {
         "layout_version": 2,
-        "codec": codec,
+        "codec": CODEC_VARINT,
         "n_buckets": n_buckets,
         "n_shards": n_shards,
         # chunk-row part_id granularity: bulk chunk rows carry the
@@ -1177,6 +1127,14 @@ def load_index(spark: SparkSession, out_dir: str,
     if manifest is None:
         raise IndexNotFoundError(
             f"no manifest.json under {out_dir!r} — not a published index"
+        )
+    if manifest.get("codec") != CODEC_VARINT:
+        # e.g. a PForDelta index from before varint became the only
+        # postings format: decoding its blocks as varint yields garbage
+        raise IndexCorruptError(
+            f"index at {out_dir!r} stores postings as "
+            f"{manifest.get('codec')!r} blocks; only {CODEC_VARINT!r} "
+            "is readable — rebuild the index"
         )
     try:
         docs = spark.read.parquet(docs_dir_path(out_dir, manifest))

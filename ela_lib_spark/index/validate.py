@@ -6,8 +6,8 @@ from-scratch engine needs an explicit one. Checks the invariants the
 build/maintenance lifecycle promises (see index/build.py and
 streaming/incremental.py docstrings):
 
-1. manifest present with required keys; every referenced data dir
-   exists and is readable;
+1. manifest present with required keys and the varint postings
+   codec; every referenced data dir exists and is readable;
 2. control tables agree with the manifest (corpus_stats == manifest
    n_docs/avg_dl; ledger totals == corpus_stats) — the contradiction
    the r4 versioned-control-table flip makes impossible, verified;
@@ -32,6 +32,8 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ela_lib_spark.index.codecs import CODEC_VARINT
 
 
 def _check(out: dict, name: str, ok: bool, detail: str = "") -> None:
@@ -61,6 +63,8 @@ def validate_index(spark: SparkSession, index_dir: str,
         # the remaining checks dereference these keys — report the
         # corruption instead of crashing on it (review r4)
         return {"ok": False, "checks": checks}
+    _check(checks, "codec", manifest["codec"] == CODEC_VARINT,
+           f"postings codec {manifest['codec']!r}")
 
     # 1. referenced dirs exist
     dirs = {
@@ -176,8 +180,6 @@ def _deep_postings_check(spark, postings_dir: str, manifest: dict,
     shuffle); returns aggregate violation counts."""
     import pandas as pd
 
-    codec = manifest["codec"]
-
     def fn(it):
         from ela_lib_spark.index.codecs import decode_block
 
@@ -191,7 +193,7 @@ def _deep_postings_check(spark, postings_dir: str, manifest: dict,
                 try:
                     ids, tfs, dls = decode_block(
                         r.doc_ids_delta, r.tfs, r.dls, int(r.n_docs),
-                        int(r.first_doc_id), codec)
+                        int(r.first_doc_id))
                 except Exception:
                     bad_decode += 1
                     continue

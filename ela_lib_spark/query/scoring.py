@@ -36,6 +36,12 @@ def bm25_contrib(
     )
 
 
-def max_impact_bound(block_max_impact: float, idf_val: float) -> float:
-    """Block upper bound: idf * (k1+1) * max(tf/(tf + k1*norm))."""
-    return idf_val * (BM25_K1 + 1.0) * block_max_impact
+def max_impact_bound(block_max_impact, idf_val: float):
+    """Block upper bound: max(idf, 0) * (k1+1) * max(tf/(tf + k1*norm)).
+
+    Until a major compaction purges them, tombstoned postings still
+    count in df while n_docs is the live count, so a head term's idf
+    can go negative; idf * (k1+1) * block_max_impact is then the
+    block's LOWEST contribution. A term with idf < 0 can only lower a
+    score, so 0 bounds it soundly."""
+    return max(idf_val, 0.0) * (BM25_K1 + 1.0) * block_max_impact

@@ -10,12 +10,13 @@ top-k is a subset of the union of shard top-ks; AND semantics are exact
 per shard because a doc's postings for *every* term live in its shard.
 
 Block-max pruning: per-term per-block upper bound
-ub = idf*(k1+1)*block_max_impact (the "zone map" Catalyst can't give
-us — it prunes files/partitions, not posting blocks). The doc space is
-walked in elementary segments between block boundaries; a segment is
-decoded only if Σ active-block ubs can beat the running k-th score
-(strictly: skipped only when ub < θ, so score ties that lose on the
-doc_id tie-break can never be wrongly pruned).
+ub = max(idf, 0)*(k1+1)*block_max_impact (scoring.max_impact_bound; the
+"zone map" Catalyst can't give us — it prunes files/partitions, not
+posting blocks). The doc space is walked in elementary segments between
+block boundaries; a segment is decoded only if Σ active-block ubs can
+beat the running k-th score (strictly: skipped only when ub < θ, so
+score ties that lose on the doc_id tie-break can never be wrongly
+pruned).
 
 Rank-identity: contributions come from query/scoring.bm25_contrib —
 the same float64 expression the brute-force oracle uses — accumulated
@@ -36,10 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ela_lib_spark import BM25_K1
 from ela_lib_spark.functions.xxh import spark_xxhash64
 from ela_lib_spark.index.codecs import decode_block
-from ela_lib_spark.query.scoring import bm25_contrib, idf
+from ela_lib_spark.query.scoring import bm25_contrib, idf, max_impact_bound
 
 RESULT_SCHEMA = "doc_id long, score double"
 
@@ -54,7 +54,7 @@ def _compact(ids: np.ndarray, scores: np.ndarray, k: int):
 
 
 def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
-                   avg_dl: float, codec: str, ub_scale: float = 1.0,
+                   avg_dl: float, ub_scale: float = 1.0,
                    deleted: np.ndarray | None = None,
                    min_match: int | None = None):
     # Postings are keyed by term_id = xxhash64(term); iteration stays in
@@ -94,8 +94,8 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
                 "idf": idf_t,
                 "first": g["first_doc_id"].to_numpy(np.int64),
                 "last": g["last_doc_id"].to_numpy(np.int64),
-                "ub": idf_t * (BM25_K1 + 1.0) * ub_scale
-                * g["block_max_impact"].to_numpy(),
+                "ub": ub_scale * max_impact_bound(
+                    g["block_max_impact"].to_numpy(), idf_t),
                 "rows": g,
                 "decoded": {},
             }
@@ -138,7 +138,7 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
                     r = p["rows"].iloc[i]
                     p["decoded"][i] = decode_block(
                         r["doc_ids_delta"], r["tfs"], r["dls"],
-                        int(r["n_docs"]), int(r["first_doc_id"]), codec,
+                        int(r["n_docs"]), int(r["first_doc_id"]),
                     )
                 ids_b, tfs_b, dls_b = p["decoded"][i]
                 lo, hi = np.searchsorted(ids_b, [s, e])
@@ -183,7 +183,7 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
 
 
 def _shard_topk_cogroup_fn(terms: list[str], mode: str, k: int, n_docs: int,
-                           avg_dl: float, codec: str, ub_scale: float = 1.0,
+                           avg_dl: float, ub_scale: float = 1.0,
                            min_match: int | None = None):
     """Distributed-tombstone variant of the shard kernel: the tombstone
     set arrives CO-GROUPED by shard (right side of a cogroup) instead
@@ -195,7 +195,7 @@ def _shard_topk_cogroup_fn(terms: list[str], mode: str, k: int, n_docs: int,
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         deleted = (np.unique(right["doc_id"].to_numpy(np.int64))
                    if len(right) else None)
-        inner = _shard_topk_fn(terms, mode, k, n_docs, avg_dl, codec,
+        inner = _shard_topk_fn(terms, mode, k, n_docs, avg_dl,
                                ub_scale, deleted, min_match)
         return inner(left)
 
@@ -468,13 +468,13 @@ def wand_topk(index: dict, terms: list[str], mode: str = "OR", k: int = 10,
             tshard.groupBy("shard")
         ).applyInPandas(
             _shard_topk_cogroup_fn(terms, mode, k, m["n_docs"], m["avg_dl"],
-                                   m["codec"], ub_scale, min_match),
+                                   ub_scale, min_match),
             schema=RESULT_SCHEMA,
         )
     else:
         shard_tops = q.groupBy("shard").applyInPandas(
             _shard_topk_fn(terms, mode, k, m["n_docs"], m["avg_dl"],
-                           m["codec"], ub_scale, deleted, min_match),
+                           ub_scale, deleted, min_match),
             schema=RESULT_SCHEMA,
         )
     return shard_tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -60,7 +60,7 @@ POSTING_CHUNKS = T.StructType(
 )
 
 # Final inverted index: one row per (term, shard, block). Blocks hold up
-# to BLOCK_SIZE postings, delta+varint (or PForDelta) encoded, with the
+# to BLOCK_SIZE postings, delta+varint encoded, with the
 # BM25 upper-bound impact for block-max WAND.
 POSTINGS = T.StructType(
     [

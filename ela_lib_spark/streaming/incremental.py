@@ -372,7 +372,7 @@ def _snapshot_path(index_dir: str, sid: str) -> str:
 def _load_archived_snapshot(index_dir: str, sid: str) -> dict | None:
     """Read one archived snapshot manifest, or None if absent. A
     CORRUPT file (operator damage — write_manifest archives via
-    tmp+replace) is moved aside to <sid>.json.corrupt with a loud
+    atomic_write_json) is moved aside to <sid>.json.corrupt with a loud
     warning instead of raising: one bad snapshot must not permanently
     wedge every retention-enabled maintenance op, and an unreadable
     manifest can't be time-traveled to anyway, so treating it as
@@ -450,6 +450,8 @@ def _archive_literal_delta_dirs(index_dir: str, snapshot: str,
     rewrite is idempotent (only fields still holding the literal name
     are touched). load_index additionally refuses to time-travel a
     snapshot whose pinned delete epochs cannot be resolved."""
+    from ela_lib_spark.index.build import atomic_write_json
+
     moved: dict[str, tuple[str, str]] = {}
     arch_root = os.path.join(index_dir, "snapshots", "archive", snapshot)
     plan: dict[str, tuple[str, str]] = {}
@@ -465,13 +467,11 @@ def _archive_literal_delta_dirs(index_dir: str, snapshot: str,
             shutil.rmtree(src, ignore_errors=True)
     if plan:
         os.makedirs(arch_root, exist_ok=True)
-        jpath = os.path.join(arch_root, ".relocation.json")
-        jtmp = jpath + ".tmp"
-        with open(jtmp, "w") as f:
-            json.dump({"skip": snapshot,
-                       "moves": {lit: {"field": fld, "rel": rel}
-                                 for lit, (fld, rel) in plan.items()}}, f)
-        os.replace(jtmp, jpath)
+        atomic_write_json(
+            os.path.join(arch_root, ".relocation.json"),
+            {"skip": snapshot,
+             "moves": {lit: {"field": fld, "rel": rel}
+                       for lit, (fld, rel) in plan.items()}})
         for literal, (field, rel) in plan.items():
             src = os.path.join(index_dir, literal)
             if os.path.exists(src):  # replay-safe: may already be moved
@@ -490,6 +490,8 @@ def _archive_literal_delta_dirs(index_dir: str, snapshot: str,
 
 def _repoint_archived_manifests(index_dir: str, skip_snapshot: str | None,
                                 moved: dict[str, tuple[str, str]]) -> None:
+    from ela_lib_spark.index.build import atomic_write_json
+
     sdir = os.path.join(index_dir, "snapshots")
     for e in os.listdir(sdir):
         if not e.endswith(".json") or e == f"{skip_snapshot}.json":
@@ -506,10 +508,7 @@ def _repoint_archived_manifests(index_dir: str, skip_snapshot: str | None,
                 sm[field] = rel
                 changed = True
         if changed:
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(sm, f, indent=1)
-            os.replace(tmp, p)
+            atomic_write_json(p, sm)
 
 
 def _replay_relocations(index_dir: str) -> int:
@@ -1067,8 +1066,7 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
         spark, index_dir, metrics, snapshot
     )
     new_postings_name = f"postings-gc{gen}"
-    merged = merge_chunks(chunks, avg_dl, n_shards, manifest["n_buckets"],
-                          manifest["codec"])
+    merged = merge_chunks(chunks, avg_dl, n_shards, manifest["n_buckets"])
     merged.write.mode("overwrite").parquet(
         os.path.join(index_dir, new_postings_name)
     )
@@ -1296,7 +1294,7 @@ def _compact_index_impl(
                 F2.col("epoch").isin(new_epochs)
             ).drop("epoch")
             merged = merge_chunks(tier_chunks, avg_dl, n_shards,
-                                  manifest["n_buckets"], manifest["codec"],
+                                  manifest["n_buckets"],
                                   deleted=(deleted if deleted is not None and len(deleted)
                                            else None))
             merged.write.mode("overwrite").parquet(
@@ -1333,7 +1331,6 @@ def _compact_index_impl(
         os.path.join(index_dir, t["postings_dir"]) for t in tiers
     ]
     merged = merge_chunks(all_chunks, avg_dl, n_shards, manifest["n_buckets"],
-                          manifest["codec"],
                           deleted=(deleted if deleted is not None and len(deleted)
                                            else None))
     merged.write.mode("overwrite").parquet(

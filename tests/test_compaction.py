@@ -115,6 +115,40 @@ def test_compaction_rank_identity_and_base_untouched(spark, tmp_root):
     _check_rank_identity(idx2, toks)
 
 
+def test_negative_idf_block_bound_keeps_rank_identity(spark, tmp_root):
+    """Until a major compaction purges them, tombstoned postings still
+    count in df while n_docs is the live count, so a head term's df can
+    exceed n_docs and its idf go negative. Block-max bounds must stay
+    upper bounds then, or WAND prunes the true top docs. The oracle
+    scores the dead versions in df, as the engine does, and drops them
+    from the ranking."""
+    idx_dir = os.path.join(tmp_root, "neg_idf_idx")
+    pages = synth_pages_df(spark, 600).cache()
+    build_index(spark, pages, idx_dir, n_buckets=4, n_shards=2, use_html=True)
+    apply_delta_batch(pages.limit(150).select("url"), 0, idx_dir,
+                      n_buckets=4, mode="delete")
+    assert compact_index(spark, idx_dir, n_shards=2)["mode"] == "minor"
+    idx = load_index(spark, idx_dir)
+    m = idx["manifest"]
+    dead = {int(x) for x in idx["deleted_ids"]}
+    assert len(dead) == 150 and m["n_docs"] == 450
+    toks = {
+        r.doc_id: list(r.tokens)
+        for r in ids_with_tokens(pages, 4, use_html=True)
+        .select("doc_id", "tokens").collect()
+    }
+    assert sum("term0000" in t for t in toks.values()) > m["n_docs"]
+    for terms, mode in ((["term0000"], "OR"),
+                        (["term0000", "term0005"], "OR"),
+                        (["term0000", "term0002"], "AND")):
+        ranked = brute_topk(toks, terms, mode, k=len(toks),
+                            n_docs=m["n_docs"], avg_dl=m["avg_dl"])
+        want = [(d, s) for d, s in ranked if d not in dead][:10]
+        got = [(r.doc_id, r.score)
+               for r in wand_topk(idx, terms, mode, k=10).collect()]
+        assert got == want, (terms, mode)
+
+
 def test_snapshot_log_and_time_travel(spark, tmp_root):
     """Every publish archives its manifest under snapshots/ (Iceberg
     metadata-log analog). Minor compaction preserves old snapshots'

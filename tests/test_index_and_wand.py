@@ -55,8 +55,7 @@ def test_postings_decode_matches_truth(index, corpus_tokens):
     got = {}
     for r in rows:
         ids, tfs, dls = decode_block(
-            r.doc_ids_delta, r.tfs, r.dls, r.n_docs, r.first_doc_id,
-            index["manifest"]["codec"],
+            r.doc_ids_delta, r.tfs, r.dls, r.n_docs, r.first_doc_id
         )
         for d, tf, dl in zip(ids, tfs, dls):
             assert d not in got
@@ -156,8 +155,7 @@ def test_wand_min_match_rank_identical(spark, index, corpus_tokens):
     assert wand_topk(index, terms, "OR", 10, min_match=4).count() == 0
 
 
-@pytest.mark.parametrize("codec", ["varint", "pfor"])
-def test_scattered_bucket_merge_rank_identical(spark, tmp_root, codec):
+def test_scattered_bucket_merge_rank_identical(spark, tmp_root):
     """Regression (r5): the docs table is HASH-partitioned by bucket,
     so with n_buckets ≫ partitions each read split's chunk covers a
     scattered bucket subset whose doc-id range interleaves other
@@ -167,20 +165,17 @@ def test_scattered_bucket_merge_rank_identical(spark, tmp_root, codec):
     measured at 20k docs / 256 buckets, 4/4 probe queries (AND and OR)
     returned WRONG top-k. This test builds at a bucket:partition ratio
     that forces the interleave and asserts (a) a clean deep fsck and
-    (b) exact rank-identity vs the brute oracle. Parametrized over
-    both codecs: the varint path sorts in the batch-vectorized kernel,
-    PFor in the per-group kernel — separate code paths, same
-    requirement."""
+    (b) exact rank-identity vs the brute oracle."""
     import os
 
     from ela_lib_spark.index.build import build_index, ids_with_tokens, load_index
     from ela_lib_spark.index.validate import validate_index
     from ela_lib_spark.sources.synth import synth_pages_df
 
-    idx_dir = os.path.join(tmp_root, f"scatter_idx_{codec}")
+    idx_dir = os.path.join(tmp_root, "scatter_idx")
     pages = synth_pages_df(spark, 900).cache()
     m = build_index(spark, pages, idx_dir, n_buckets=64, n_shards=2,
-                    use_html=True, codec=codec)
+                    use_html=True)
     res = validate_index(spark, idx_dir, deep=True)
     assert res["ok"], res["checks"]
     idx = load_index(spark, idx_dir)

@@ -271,3 +271,47 @@ def test_expire_without_any_window_refuses(spark, tmp_root):
     # explicit window still works
     out = expire_snapshots(idx_dir, keep_last=5)
     assert out["expired"] == []
+
+
+def test_failed_manifest_replace_keeps_previous_snapshot(
+        spark, tmp_root, index_dir, monkeypatch):
+    """A commit that dies at the manifest rename leaves the previous
+    manifest.json in place and loadable; a commit that completes
+    fsyncs both the written file and its directory."""
+    import shutil
+    import stat
+
+    from ela_lib_spark.index.build import new_snapshot_id, write_manifest
+
+    idx_dir = os.path.join(tmp_root, "commit_crash_idx")
+    shutil.copytree(index_dir, idx_dir)
+    old = read_manifest(idx_dir)
+
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if os.path.basename(dst) == "manifest.json":
+            raise OSError("injected")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="injected"):
+        write_manifest(idx_dir, dict(old, n_docs=1,
+                                     snapshot_id=new_snapshot_id("crash")))
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert read_manifest(idx_dir) == old
+    idx = load_index(spark, idx_dir)
+    assert idx["manifest"]["snapshot_id"] == old["snapshot_id"]
+    assert wand_topk(idx, *QUERY, 10).count() == 10
+
+    synced = []
+    real_fsync = os.fsync
+
+    def fsync(fd):
+        synced.append(stat.S_ISDIR(os.fstat(fd).st_mode))
+        return real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    new = write_manifest(idx_dir, dict(old, snapshot_id=new_snapshot_id("ok")))
+    assert read_manifest(idx_dir) == new
+    assert False in synced and True in synced

@@ -113,6 +113,25 @@ def test_validate_catches_corruptions(spark, tmp_root):
     assert not res["checks"]["deep_block_decode"]["ok"]
 
 
+def test_pfor_manifest_fails_loudly(spark, tmp_root, index_dir):
+    """Postings are delta+varint blocks only: an index whose manifest
+    names another codec (a PForDelta index from an older build) must
+    fail to load and fail validation instead of decoding garbage."""
+    import pytest
+
+    from ela_lib_spark.errors import IndexCorruptError
+    from ela_lib_spark.index.build import load_index, rewrite_manifest_in_place
+
+    idx_dir = os.path.join(tmp_root, "val_pfor_idx")
+    shutil.copytree(index_dir, idx_dir)
+    rewrite_manifest_in_place(idx_dir, dict(read_manifest(idx_dir),
+                                            codec="pfor"))
+    with pytest.raises(IndexCorruptError, match="pfor"):
+        load_index(spark, idx_dir)
+    res = validate_index(spark, idx_dir)
+    assert not res["ok"] and not res["checks"]["codec"]["ok"]
+
+
 def test_validate_cli(spark, tmp_root):
     import io
     from contextlib import redirect_stdout
